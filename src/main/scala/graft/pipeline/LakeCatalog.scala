@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,6 +27,7 @@ import org.apache.spark.sql.types._
   * pass would ride on the same log.
   */
 final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
+  import LakeMeta.{deleteRecursive, hiddenCol}
 
   /** Physical partition column for `days(ts)`: the `graft_days_` prefix
     * is the derivation contract HiddenPartitionPruning keys on (the
@@ -41,9 +42,9 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * through the [[graft.sources.GraftCatalog]] plugin. */
   private[graft] def warehouse: String = warehouseDir
 
-  // Metadata layout + read helpers are shared with the DataSourceV2
-  // path mount (graft.sources.GraftLakeSource) via LakeMeta — one
-  // implementation so the two read paths can never drift.
+  // Metadata layout and the snapshot-log codec are shared with the
+  // catalog plugin and path mount (graft.sources) via LakeMeta — one
+  // implementation so no two surfaces can drift.
   private[graft] def tablePath(name: String): String =
     LakeMeta.tablePath(warehouseDir, name)
 
@@ -65,6 +66,10 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
 
   private def snapshotLogPath(name: String) =
     LakeMeta.snapshotLogPath(warehouseDir, name)
+
+  /** The table's parsed snapshot log (see [[LakeMeta.Log]]). */
+  private def log(name: String): LakeMeta.Log =
+    LakeMeta.log(warehouseDir, name)
 
   private def schemaPath(name: String) =
     LakeMeta.schemaPath(warehouseDir, name)
@@ -145,7 +150,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * — the streaming sink this closes the r14 Next #6 gap for. */
   def appendExactlyOnce(name: String, df: DataFrame, batchId: Long,
       partitionTs: Option[String] = None): Boolean = {
-    if (LakeMeta.batchApplied(warehouseDir, name, batchId)) return false
+    if (log(name).batchApplied(batchId)) return false
     appendCommit(name, df, partitionTs, batchId = Some(batchId))
     true
   }
@@ -159,10 +164,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * queries exactly when its log line exists. */
   private def appendCommit(name: String, df: DataFrame,
       partitionTs: Option[String], batchId: Option[Long]): Unit = {
-    val dataRoot = ensureTable(name)
-    val id = nextSnapshotId(name)
-    val commitPath = dataRoot.resolve(s"$commitCol=$id")
-    val stage = dataRoot.resolve(
+    val stage = ensureTable(name).resolve(
       s".append_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
     val writer = partitionTs match {
       case Some(ts) =>
@@ -171,16 +173,28 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       case None => df.write
     }
     writer.mode(SaveMode.Overwrite).parquet(stage.toString)
+    publishCommit(name, stage, df.schema, partitionTs, "append", batchId)
+  }
+
+  /** Promote a fully-written staged directory to the next `commit=N`
+    * with ONE atomic rename (replacing an unlogged orphan of the same
+    * id), fold its schema into the sidecar and log it. Returns the
+    * snapshot id. */
+  private def publishCommit(name: String, stage: Path, schema: StructType,
+      partitionTs: Option[String], op: String,
+      batchId: Option[Long] = None): Long = {
+    val commitPath =
+      ensureTable(name).resolve(s"$commitCol=${log(name).nextId}")
     if (Files.exists(commitPath)) deleteRecursive(commitPath)
     Files.move(stage, commitPath)
     // Fold this commit's schema into the sidecar (add-column evolution
     // happens HERE, once, driver-side — not on every read).
-    saveSchema(name, appendReadSchema(name, df.schema, partitionTs))
+    saveSchema(name, appendReadSchema(name, schema, partitionTs))
     // Row count for the snapshot log comes from the WRITTEN parquet
     // footers (a driver-side metadata read) — counting the input df
     // would execute its whole plan a second time per commit.
-    logSnapshot(name, "append", parquetRowCount(commitPath.toString), id,
-      batchId)
+    LakeMeta.append(snapshotLogPath(name), op,
+      parquetRowCount(commitPath.toString), batchId = batchId).id
   }
 
   /** The read schema after an append of `incoming` data columns:
@@ -281,9 +295,6 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     df.drop(df.columns.filter(hiddenCol).toSeq: _*)
   }
 
-  private def hiddenCol(c: String): Boolean =
-    c == commitCol || c.startsWith(graft.plans.HiddenPartitionPruning.Prefix)
-
   /** Time travel: the table as of `snapshotId` (inclusive) — every
     * append commit up to that snapshot. The filter on the `commit`
     * partition column prunes later commits' files at the scan, the
@@ -294,13 +305,10 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * only raw accumulates snapshots hourly). */
   def tableAsOf(name: String, snapshotId: Long): DataFrame = {
     val df = readTable(name)
-    require(df.columns.contains(commitCol),
-      s"$name has no commit history (CTAS tables hold only their latest state)")
-    require(snapshotId >= rewriteFloor(name),
-      s"$name snapshot $snapshotId predates the last compaction " +
-        s"(rewrite snapshot ${rewriteFloor(name)}) — its files were folded away")
-    val filtered = df.filter(col(commitCol) <= snapshotId)
-    filtered.drop(df.columns.filter(hiddenCol).toSeq: _*)
+    LakeMeta.requireTimeTravel(warehouseDir, name,
+      df.columns.contains(commitCol), snapshotId)
+    df.filter(col(commitCol) <= snapshotId)
+      .drop(df.columns.filter(hiddenCol).toSeq: _*)
   }
 
   /** Keyed upsert (the MERGE INTO … WHEN MATCHED UPDATE / WHEN NOT
@@ -357,12 +365,8 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * from readers and swept on entry. */
   def rollbackTo(name: String, snapshotId: Long): Long = {
     recoverDeletes(name)
-    val df = readTable(name)
-    require(df.columns.contains(commitCol),
-      s"$name has no commit history (CTAS tables hold only their latest state)")
-    require(snapshotId >= rewriteFloor(name),
-      s"$name snapshot $snapshotId predates the last compaction " +
-        s"(rewrite snapshot ${rewriteFloor(name)}) — its files were folded away")
+    LakeMeta.requireTimeTravel(warehouseDir, name,
+      readTable(name).columns.contains(commitCol), snapshotId)
     // sweep retired dirs from a previously-crashed rollback
     import scala.jdk.CollectionConverters._
     val root = Paths.get(dataPath(name))
@@ -371,15 +375,8 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       .filter(_.getFileName.toString.startsWith(".rollback_old_"))
       .foreach(deleteRecursive)
     finally st0.close()
-    val st = Files.list(root)
-    val doomed = try st.iterator().asScala.toList
-      .filter { p =>
-        val n0 = p.getFileName.toString
-        n0.startsWith(s"$commitCol=") &&
-          n0.substring(commitCol.length + 1).toLong > snapshotId
-      }
-      .sortBy(p => -p.getFileName.toString.substring(commitCol.length + 1).toLong)
-    finally st.close()
+    val doomed = LakeMeta.commitDirs(root).filter(_._1 > snapshotId)
+      .map(_._2).reverse
     if (doomed.isEmpty) return 0L
     var removed = 0L
     doomed.foreach { commitDir =>
@@ -389,7 +386,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       Files.move(commitDir, retired) // atomic retire — readers skip dot-dirs
       deleteRecursive(retired)       // purge
     }
-    logSnapshot(name, "rollback", -removed)
+    LakeMeta.append(snapshotLogPath(name), "rollback", -removed)
     removed
   }
 
@@ -453,16 +450,15 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
   /** S6 — the `table.snapshots` metadata scan (reference README.md:301):
     * one row per commit with Iceberg-shaped columns. */
   def snapshots(name: String): DataFrame = {
-    val p = snapshotLogPath(name)
     val schema = StructType(Seq(
       StructField("committed_at", TimestampType),
       StructField("snapshot_id", LongType),
       StructField("operation", StringType),
       StructField("added_records", LongType)))
-    if (!Files.exists(p)) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).json(p.toString)
-      .orderBy(col("snapshot_id"))
+    import scala.jdk.CollectionConverters._
+    val rows = log(name).entries.sortBy(_.id).map(e =>
+      org.apache.spark.sql.Row(e.committedAt, e.id, e.operation, e.addedRecords))
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** The `table.partitions` metadata scan (Iceberg's partitions
@@ -528,24 +524,10 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     val current = currentSnapshotId(name)
     require(olderThan <= current,
       s"cannot expire up to $olderThan: table $name is at snapshot $current")
-    if (olderThan > rewriteFloor(name)) {
-      val p = snapshotLogPath(name)
-      Files.createDirectories(p.getParent)
-      val id = nextSnapshotId(name)
-      val ts = java.time.Instant.now().toString
-      val line = s"""{"committed_at":"$ts","snapshot_id":$id,""" +
-        s""""operation":"expire","added_records":0,"fence":$olderThan}\n"""
-      Files.write(p, line.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    }
-    rewriteFloor(name)
-  }
-
-  private def nextSnapshotId(name: String): Long = {
-    val p = snapshotLogPath(name)
-    if (!Files.exists(p)) return 1L
-    val lines = Files.lines(p)
-    try lines.count() + 1 finally lines.close()
+    if (olderThan > log(name).floor)
+      LakeMeta.append(snapshotLogPath(name), "expire", 0L,
+        fence = Some(olderThan))
+    log(name).floor
   }
 
   /** MERGE (upsert) by key: rows in `updates` replace same-key rows in
@@ -644,7 +626,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
         Files.move(tmp, commitDir)     // promote
         deleteRecursive(retired)       // purge the old contents last
       }
-      logSnapshot(name, "rewrite", remaining)
+      LakeMeta.append(snapshotLogPath(name), "rewrite", remaining)
       nDel
     }
   }
@@ -693,17 +675,14 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * like tableAsOf. */
   def tableSince(name: String, snapshotId: Long): DataFrame = {
     val df = readTable(name)
-    require(df.columns.contains(commitCol),
-      s"$name has no commit history (CTAS tables hold only their latest state)")
-    require(snapshotId >= rewriteFloor(name),
-      s"$name change feed from $snapshotId predates the last compaction " +
-        s"(rewrite snapshot ${rewriteFloor(name)}) — deltas were folded away")
+    LakeMeta.requireTimeTravel(warehouseDir, name,
+      df.columns.contains(commitCol), snapshotId)
     df.filter(col(commitCol) > snapshotId)
       .drop(df.columns.filter(hiddenCol).toSeq: _*)
   }
 
   /** Latest snapshot id of an append table (0 when empty). */
-  def currentSnapshotId(name: String): Long = nextSnapshotId(name) - 1
+  def currentSnapshotId(name: String): Long = log(name).current
 
   /** The `table.files` metadata scan (the Iceberg `files` table
     * analog, completing the metadata family beside [[snapshots]] and
@@ -788,18 +767,8 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     * endpoint uses to expose everything at startup). */
   def tableNames: Seq[String] = {
     val root = Paths.get(warehouseDir)
-    if (!Files.exists(root)) return Nil
-    import scala.jdk.CollectionConverters._
-    def dirs(p: java.nio.file.Path): List[String] = {
-      val st = Files.list(p)
-      try st.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .toList.sorted
-      finally st.close()
-    }
-    for (ns <- dirs(root); t <- dirs(root.resolve(ns))) yield s"$ns.$t"
+    for (ns <- LakeMeta.visibleDirs(root);
+         t <- LakeMeta.visibleDirs(root.resolve(ns))) yield s"$ns.$t"
   }
 
   /** Expose `name` to the SQL surface as temp view `viewName`
@@ -818,19 +787,12 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       inst => tableAsOf(name, snapshotIdAt(name, inst))))
   }
 
-  /** Latest snapshot id committed at or before `inst` (metadata-only:
-    * one pass over the jsonl snapshot log). */
-  def snapshotIdAt(name: String, inst: java.time.Instant): Long = {
-    val rows = snapshots(name)
-      .filter(col("committed_at") <=
-        lit(java.sql.Timestamp.from(inst)))
-      .agg(max(col("snapshot_id")).as("sid")).collect()
-    val sid = if (rows.isEmpty || rows(0).isNullAt(0)) -1L
-      else rows(0).getLong(0)
-    require(sid >= 1L,
-      s"$name has no snapshot committed at or before $inst")
-    sid
-  }
+  /** Latest snapshot id committed at or before `inst`, compared at
+    * microsecond precision (driver-side read of the snapshot log — no
+    * Spark job; the same resolution the catalog plugin and the path
+    * mount use). */
+  def snapshotIdAt(name: String, inst: java.time.Instant): Long =
+    LakeMeta.snapshotIdAt(warehouseDir, name, inst)
 
   /** Row-level diff between two snapshots: what a reader at `to` sees
     * that a reader at `from` did not (`added`) and vice versa
@@ -869,14 +831,8 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     val raw = readTable(name)
     require(raw.columns.contains(commitCol),
       s"$name has no commit history (compact applies to append tables)")
-    val oldCommits = {
-      import scala.jdk.CollectionConverters._
-      val stream = Files.list(Paths.get(path))
-      try stream.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith(s"$commitCol="))
-      finally stream.close()
-    }
-    val id = nextSnapshotId(name)
+    val oldCommits = LakeMeta.commitDirs(Paths.get(path)).map(_._2)
+    val id = log(name).nextId
     val partCols = raw.columns
       .filter(_.startsWith(graft.plans.HiddenPartitionPruning.Prefix)).toSeq
     val data = raw.drop(commitCol)
@@ -886,13 +842,9 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     // reads only the pre-existing commit dirs
     writer.mode(SaveMode.Append).parquet(s"$path/$commitCol=$id")
     oldCommits.foreach(deleteRecursive)
-    logSnapshot(name, "rewrite", parquetRowCount(s"$path/$commitCol=$id"), id)
+    LakeMeta.append(snapshotLogPath(name), "rewrite",
+      parquetRowCount(s"$path/$commitCol=$id"))
   }
-
-  /** Highest `rewrite` snapshot id (0 if never compacted): snapshots
-    * below it were physically folded together and cannot be read. */
-  private def rewriteFloor(name: String): Long =
-    LakeMeta.rewriteFloor(warehouseDir, name)
 
   /** Partition-scoped overwrite: replaces ONLY the partitions present
     * in `df` (dynamic partition overwrite), leaving every other
@@ -912,7 +864,8 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
     saveSchema(name, StructType(
       dataFields :+ StructField(partitionCol,
         df.schema(partitionCol).dataType)))
-    logSnapshot(name, "overwrite_partitions", parquetRowCount(path))
+    LakeMeta.append(snapshotLogPath(name), "overwrite_partitions",
+      parquetRowCount(path))
   }
 
   /** Bucketed table write into the session catalog: co-locates rows by
@@ -1008,34 +961,7 @@ final class LakeCatalog(spark: SparkSession, warehouseDir: String) {
       deleteRecursive(staging)
       Left(spark.createDataFrame(
         java.util.Arrays.asList(reportRows: _*), reportSchema))
-    } else {
-      val dataRoot = ensureTable(name)
-      val id = nextSnapshotId(name)
-      val commitPath = dataRoot.resolve(s"$commitCol=$id")
-      Files.move(staging, commitPath)
-      saveSchema(name, appendReadSchema(name, df.schema, partitionTs))
-      logSnapshot(name, "append_wap", parquetRowCount(commitPath.toString), id)
-      Right(id)
-    }
+    } else
+      Right(publishCommit(name, staging, df.schema, partitionTs, "append_wap"))
   }
-
-  private def logSnapshot(name: String, op: String, rows: Long,
-                          snapshotId: Long = -1L,
-                          batchId: Option[Long] = None): Unit = {
-    val p = snapshotLogPath(name)
-    Files.createDirectories(p.getParent)
-    val id = if (snapshotId > 0) snapshotId else nextSnapshotId(name)
-    val ts = java.time.Instant.now().toString
-    val batchField = batchId.map(b => s""","batch_id":$b""").getOrElse("")
-    val line =
-      s"""{"committed_at":"$ts","snapshot_id":$id,"operation":"$op","added_records":$rows$batchField}\n"""
-    Files.write(p, line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-  }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
 }

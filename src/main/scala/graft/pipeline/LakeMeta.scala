@@ -1,18 +1,21 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.time.Instant
+import java.time.temporal.ChronoUnit.MICROS
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Warehouse-metadata READ helpers shared by [[LakeCatalog]] (the
-  * in-process facade) and [[graft.sources.GraftLakeSource]] (the
-  * DataSourceV2 path mount): one implementation of the sidecar /
-  * snapshot-log / tags layout so the two read paths can never drift.
+/** The warehouse layout shared by [[LakeCatalog]] (the in-process
+  * facade), [[TableCommit]] and the `graft.sources` catalog plugin and
+  * path mount: one implementation of the sidecar / snapshot-log / tags
+  * layout so no two surfaces can drift.
   *
-  * All functions are driver-side metadata reads keyed by
+  * Functions are driver-side metadata operations keyed by
   * (warehouseDir, namespace.table) — the same signature shape Iceberg's
-  * metadata layer has (catalog location + table identifier). Writes
-  * stay in LakeCatalog: the V2 source is read-only by design (the
-  * reference's writers all run through the pipeline facade).
+  * metadata layer has (catalog location + table identifier). The
+  * snapshot log's codec lives here whole: its one writer ([[append]])
+  * and its one reader ([[readLog]] / [[Log]]) serve every surface; the
+  * data writes themselves stay in LakeCatalog and TableCommit.
   */
 private[graft] object LakeMeta {
 
@@ -105,85 +108,144 @@ private[graft] object LakeMeta {
       .find(_.startsWith(graft.plans.HiddenPartitionPruning.Prefix))
       .map(_.stripPrefix(graft.plans.HiddenPartitionPruning.Prefix))
 
-  /** True iff a snapshot-log line carries `"batch_id":batchId` — the
-    * idempotence check behind [[LakeCatalog.appendExactlyOnce]] (a
-    * replayed foreachBatch epoch is a no-op). Pure metadata-file pass
-    * over the KB-scale log. */
-  def batchApplied(warehouseDir: String, name: String,
-      batchId: Long): Boolean = {
-    val p = snapshotLogPath(warehouseDir, name)
-    Files.exists(p) && {
-      val re = (""""batch_id":""" + batchId + """[,}\s]""").r
-      val lines = Files.lines(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        lines.iterator().asScala.exists(l => re.findFirstIn(l).isDefined)
-      } finally lines.close()
-    }
+  /** True iff `c` is a physical partition column (`commit` or a
+    * `graft_days_*` hidden day column) — present in the files, never in
+    * the logical schema readers see. */
+  def hiddenCol(c: String): Boolean =
+    c == CommitCol || c.startsWith(graft.plans.HiddenPartitionPruning.Prefix)
+
+  /** The `commit=N` partition directories under a table's data
+    * directory, as (commit id, dir), ascending by id. */
+  def commitDirs(dataDir: Path): Seq[(Long, Path)] = {
+    import scala.jdk.CollectionConverters._
+    val prefix = CommitCol + "="
+    val st = Files.list(dataDir)
+    try st.iterator().asScala
+      .filter(_.getFileName.toString.startsWith(prefix))
+      .map(p => p.getFileName.toString.stripPrefix(prefix).toLong -> p)
+      .toSeq.sortBy(_._1)
+    finally st.close()
   }
 
-  /** True iff `id` appears in the table's snapshot log — the
-    * existence check behind VERSION-AS-OF resolution (a digit string
-    * is only a snapshot id if the snapshot is real; otherwise it can
-    * still be a tag name). Pure metadata-file pass. */
-  def snapshotExists(warehouseDir: String, name: String, id: Long): Boolean = {
-    val p = snapshotLogPath(warehouseDir, name)
-    Files.exists(p) && {
-      val idRe = (""""snapshot_id":""" + id + """[,}\s]""").r
-      val lines = Files.lines(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        lines.iterator().asScala.exists(l => idRe.findFirstIn(l).isDefined)
-      } finally lines.close()
-    }
-  }
-
-  /** Latest snapshot id committed at or before `inst` — the
-    * as-of-timestamp resolution, as a pure metadata-file pass (no
-    * Spark job; the facade's `snapshotIdAt` reads through its
-    * snapshots DataFrame, this serves the V2 source where no session
-    * frame exists yet). */
-  def snapshotIdAt(warehouseDir: String, name: String,
-      inst: java.time.Instant): Long = {
-    val p = snapshotLogPath(warehouseDir, name)
-    require(Files.exists(p), s"$name has no snapshot log")
-    val tsRe = """"committed_at":"([^"]+)"""".r
-    val idRe = """"snapshot_id":(\d+)""".r
-    val lines = Files.lines(p)
-    val best =
-      try {
-        import scala.jdk.CollectionConverters._
-        lines.iterator().asScala.flatMap { l =>
-          for {
-            t <- tsRe.findFirstMatchIn(l).map(_.group(1))
-            id <- idRe.findFirstMatchIn(l).map(_.group(1).toLong)
-            if !java.time.Instant.parse(t).isAfter(inst)
-          } yield id
-        }.foldLeft(-1L)(math.max)
-      } finally lines.close()
-    require(best >= 1L,
-      s"$name has no snapshot committed at or before $inst")
-    best
-  }
-
-  /** Oldest snapshot still time-travelable: physical rewrites fence at
-    * their OWN snapshot (earlier files are gone); expire entries carry
-    * an explicit fence value. */
-  def rewriteFloor(warehouseDir: String, name: String): Long = {
-    val p = snapshotLogPath(warehouseDir, name)
-    if (!Files.exists(p)) return 0L
-    val idRe = """"snapshot_id":(\d+)""".r
-    val fenceRe = """"fence":(\d+)""".r
-    val lines = Files.lines(p)
-    try {
+  /** Sorted names of the namespaces / tables under `p`: subdirectories
+    * not hidden by a `_` or `.` prefix (Nil when `p` is no directory). */
+  def visibleDirs(p: Path): List[String] =
+    if (!Files.isDirectory(p)) Nil
+    else {
       import scala.jdk.CollectionConverters._
-      lines.iterator().asScala.flatMap { l =>
-        if (l.contains("\"operation\":\"rewrite\""))
-          idRe.findFirstMatchIn(l).map(_.group(1).toLong)
-        else if (l.contains("\"operation\":\"expire\""))
-          fenceRe.findFirstMatchIn(l).map(_.group(1).toLong)
-        else None
-      }.foldLeft(0L)(math.max)
-    } finally lines.close()
+      val st = Files.list(p)
+      try st.iterator().asScala
+        .filter(Files.isDirectory(_))
+        .map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+        .toList.sorted
+      finally st.close()
+    }
+
+  /** Delete `p` and everything under it (no-op when absent); the walk
+    * stream is closed even when a delete throws part-way. */
+  def deleteRecursive(p: Path): Unit =
+    if (Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally st.close()
+    }
+
+  // ---- snapshot log codec: the only code that knows the line format
+  // {"committed_at":"<ISO instant>","snapshot_id":N,"operation":"<op>",
+  //  "added_records":R[,"fence":F][,"batch_id":B]} — one line per
+  // snapshot, ids contiguous from 1 in file order.
+
+  /** One snapshot. `committedAt` is held at microsecond precision, the
+    * precision `snapshots` shows, so as-of-timestamp lookups agree with
+    * what a caller reads back. `fence` rides `expire` entries, `batchId`
+    * exactly-once appends. */
+  final case class Entry(committedAt: Instant, id: Long, operation: String,
+      addedRecords: Long, fence: Option[Long], batchId: Option[Long])
+
+  private def format(e: Entry): String = {
+    val f = e.fence.map(v => s""","fence":$v""").getOrElse("")
+    val b = e.batchId.map(v => s""","batch_id":$v""").getOrElse("")
+    s"""{"committed_at":"${e.committedAt}","snapshot_id":${e.id},""" +
+      s""""operation":"${e.operation}","added_records":${e.addedRecords}$f$b}"""
   }
+
+  private val FieldRe = """"(\w+)":(?:"([^"]*)"|(-?\d+))""".r
+
+  private def parse(line: String): Entry = {
+    val f = FieldRe.findAllMatchIn(line)
+      .map(m => m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))).toMap
+    Entry(Instant.parse(f("committed_at")).truncatedTo(MICROS),
+      f("snapshot_id").toLong, f("operation"), f("added_records").toLong,
+      f.get("fence").map(_.toLong), f.get("batch_id").map(_.toLong))
+  }
+
+  /** A table's parsed snapshot log, in file (= id) order. */
+  final case class Log(entries: Seq[Entry]) {
+    /** Latest snapshot id (0 for an empty log). */
+    def current: Long = entries.size.toLong
+    def nextId: Long = current + 1
+
+    /** Oldest snapshot still time-travelable: a rewrite fences at its
+      * own id (earlier files are gone), an expire at its fence. */
+    def floor: Long = entries.collect {
+      case Entry(_, id, "rewrite", _, _, _) => id
+      case Entry(_, _, "expire", _, Some(fence), _) => fence
+    }.foldLeft(0L)(math.max)
+
+    /** Latest snapshot committed at or before `inst` (Iceberg's
+      * as-of-timestamp rule). */
+    def idAt(inst: Instant): Option[Long] =
+      entries.filterNot(_.committedAt.isAfter(inst)).map(_.id).maxOption
+
+    def exists(id: Long): Boolean = entries.exists(_.id == id)
+
+    def batchApplied(batchId: Long): Boolean =
+      entries.exists(_.batchId.contains(batchId))
+  }
+
+  /** Parse the log at `p` (empty when the file does not exist). */
+  def readLog(p: Path): Log =
+    if (!Files.exists(p)) Log(Nil)
+    else {
+      import scala.jdk.CollectionConverters._
+      Log(Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map(parse))
+    }
+
+  def log(warehouseDir: String, name: String): Log =
+    readLog(snapshotLogPath(warehouseDir, name))
+
+  /** Append one entry under the next id to the log at `p` and return
+    * it. A caller that names a `commit=N` dir after [[Log.nextId]]
+    * first relies on single-writer discipline for the ids to agree. */
+  def append(p: Path, operation: String, addedRecords: Long,
+      fence: Option[Long] = None, batchId: Option[Long] = None): Entry = {
+    Files.createDirectories(p.getParent)
+    val e = Entry(Instant.now().truncatedTo(MICROS), readLog(p).nextId,
+      operation, addedRecords, fence, batchId)
+    Files.write(p, (format(e) + "\n").getBytes("UTF-8"),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    e
+  }
+
+  /** Refuse a time-travel read of `name` at `snapshotId` that the table
+    * cannot serve: a table without append history (CTAS tables hold
+    * only their latest state), or a snapshot below the log's floor. */
+  def requireTimeTravel(warehouseDir: String, name: String,
+      hasHistory: Boolean, snapshotId: Long): Unit = {
+    require(hasHistory,
+      s"$name has no commit history (CTAS tables hold only their latest state)")
+    val floor = log(warehouseDir, name).floor
+    require(snapshotId >= floor,
+      s"$name snapshot $snapshotId predates the last compaction " +
+        s"(rewrite snapshot $floor) — its files were folded away")
+  }
+
+  /** [[Log.idAt]] for `name`, failing loudly when no snapshot is that
+    * old: the as-of-timestamp resolution of every surface. */
+  def snapshotIdAt(warehouseDir: String, name: String, inst: Instant): Long =
+    log(warehouseDir, name).idAt(inst).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name has no snapshot committed at or before $inst"))
 }

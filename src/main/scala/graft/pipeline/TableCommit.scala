@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Crash-atomic table commit via GENERATION-POINTER INDIRECTION, shared
   * by the facade CTAS ([[LakeCatalog.createOrReplace]]) and the V2
@@ -70,6 +70,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * enters the lock.
   */
 private[graft] object TableCommit {
+  import LakeMeta.deleteRecursive
 
   /** Test-only crash injection: invoked with a point label at each
     * protocol step; a test hook throws to simulate a crash mid-commit.
@@ -228,9 +229,10 @@ private[graft] object TableCommit {
     * `logEntry = Some((op, rows))` makes the commit SELF-DESCRIBING:
     * inside the lock, the current generation's snapshot log (and tags,
     * if the staged meta has none) are folded into the staged meta and
-    * the new commit's own log line is appended — BEFORE the pointer
-    * swap, so a committed generation always carries its own history
-    * entry and racing last-commit-wins writers keep the log linear.
+    * [[LakeMeta.append]] logs the new commit under the folded log's
+    * next id — BEFORE the pointer swap, so a committed generation always
+    * carries its own history entry and racing last-commit-wins writers
+    * keep the log linear.
     * `logEntry = None` publishes the staged meta as-is (the V2 staged
     * path, whose staging-table writes already logged themselves). */
   def commitGeneration(warehouse: String, ns: String, table: String,
@@ -257,18 +259,7 @@ private[graft] object TableCommit {
           if (Files.exists(curTags) && !Files.exists(stagedTags))
             Files.copy(curTags, stagedTags)
         }
-        val id =
-          if (!Files.exists(stagedLog)) 1L
-          else {
-            val lines = Files.lines(stagedLog)
-            try lines.count() + 1 finally lines.close()
-          }
-        val ts = java.time.Instant.now().toString
-        Files.write(stagedLog,
-          (s"""{"committed_at":"$ts","snapshot_id":$id,""" +
-            s""""operation":"$op","added_records":$rows}""" + "\n")
-            .getBytes("UTF-8"),
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        LakeMeta.append(stagedLog, op, rows)
       }
       crashHook("pre-publish")
       val gen = c.resolve(newGenName())
@@ -357,12 +348,4 @@ private[graft] object TableCommit {
       }
     }
   }
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally st.close()
-    }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
@@ -11,6 +10,7 @@ import org.apache.spark.sql.types.{DateType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.pipeline.{LakeCatalog, LakeMeta}
+import graft.pipeline.LakeMeta.deleteRecursive
 
 /** `TableCatalog` + `SupportsNamespaces` plugin for LakeCatalog
   * warehouses — the reference's actual access pattern, where Spark is
@@ -86,23 +86,12 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     s"${ident.namespace.head}.${ident.name}"
   }
 
-  private def dirsUnder(p: java.nio.file.Path): List[String] = {
-    if (!Files.isDirectory(p)) return Nil
-    val st = Files.list(p)
-    try st.iterator().asScala
-      .filter(Files.isDirectory(_))
-      .map(_.getFileName.toString)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      .toList.sorted
-    finally st.close()
-  }
-
   // ---- tables -------------------------------------------------------
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(
       (catalogName +: namespace.toSeq).toArray)
-    dirsUnder(Paths.get(warehouse, namespace.head))
+    LakeMeta.visibleDirs(Paths.get(warehouse, namespace.head))
       .map(t => Identifier.of(namespace, t)).toArray
   }
 
@@ -131,7 +120,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val name = fullName(ident)
     val sid: Long = scala.util.Try(version.toLong).toOption
-      .filter(id => id >= 1L && LakeMeta.snapshotExists(warehouse, name, id))
+      .filter(id => id >= 1L && LakeMeta.log(warehouse, name).exists(id))
       .orElse(LakeMeta.readTags(warehouse, name).get(version))
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot or tag '$version' on $name"))
@@ -300,11 +289,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           StructField("snapshot_id", LongType)))) { in =>
           val t = in.getUTF8String(0).toString
           facade0.compact(t)
-          val sid = facade0.snapshots(t)
-            .agg(org.apache.spark.sql.functions.max(
-              org.apache.spark.sql.functions.col("snapshot_id")))
-            .head().getLong(0)
-          row(t, sid)
+          row(t, facade0.currentSnapshotId(t))
         }
       case other => throw new IllegalArgumentException(
         s"unknown procedure system.$other; available: " +
@@ -339,7 +324,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   // ---- namespaces ---------------------------------------------------
 
   override def listNamespaces(): Array[Array[String]] =
-    dirsUnder(Paths.get(warehouse)).map(Array(_)).toArray
+    LakeMeta.visibleDirs(Paths.get(warehouse)).map(Array(_)).toArray
 
   override def listNamespaces(
       namespace: Array[String]): Array[Array[String]] =
@@ -385,13 +370,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     deleteRecursive(Paths.get(warehouse, namespace.head))
     true
   }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally st.close()
-    }
 
   // ---- staged (atomic) CTAS / RTAS -----------------------------------
   //

@@ -70,10 +70,6 @@ final class GraftLakeSource extends TableProvider with DataSourceRegister {
 
 private[graft] object GraftLakeSource {
 
-  private def hiddenCol(c: String): Boolean =
-    c == LakeMeta.CommitCol ||
-      c.startsWith(graft.plans.HiddenPartitionPruning.Prefix)
-
   /** Resolve (path, snapshot-id/tag options) → a wrapper Table whose
     * visible schema hides the physical partition columns and whose
     * scan covers exactly the selected commit directories. */
@@ -150,16 +146,6 @@ private[graft] object GraftLakeSource {
           "LakeCatalog.recoverDeletes on the writing side before reading")
     }
 
-    val commitDirs: Seq[(Long, String)] = {
-      val stream = Files.list(dir)
-      try stream.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(LakeMeta.CommitCol + "="))
-        .map(p => p.getFileName.toString
-          .substring(LakeMeta.CommitCol.length + 1).toLong -> p.toString)
-        .toSeq.sortBy(_._1)
-      finally stream.close()
-    }
-
     val sidecar = LakeMeta.savedSchema(warehouse, name)
     val (paths, schemaForInner) = snapshotId match {
       case None =>
@@ -167,18 +153,13 @@ private[graft] object GraftLakeSource {
         // discovered underneath and split out as partition columns
         (Seq(dir.toString), sidecar)
       case Some(id) =>
-        require(commitDirs.nonEmpty,
-          s"$name has no commit history (CTAS tables hold only their " +
-            "latest state)")
-        val floor = LakeMeta.rewriteFloor(warehouse, name)
-        require(id >= floor,
-          s"$name snapshot $id predates the last compaction " +
-            s"(rewrite snapshot $floor) — its files were folded away")
+        val commitDirs = LakeMeta.commitDirs(dir)
+        LakeMeta.requireTimeTravel(warehouse, name, commitDirs.nonEmpty, id)
         // manifest-prune analog: selected commit directories become
         // the scan roots, so excluded commits are never even listed;
         // basePath (set below) anchors partition discovery at the
         // table root so `commit=N` still parses as a partition column.
-        (commitDirs.filter(_._1 <= id).map(_._2), sidecar)
+        (commitDirs.filter(_._1 <= id).map(_._2.toString), sidecar)
     }
 
     val innerOptions = {
@@ -200,7 +181,7 @@ private[graft] object GraftLakeSource {
     // path) it falls back to the inner table's merged-footer schema.
     val visible = StructType(
       schemaForInner.getOrElse(inner.schema)
-        .fields.filterNot(f => hiddenCol(f.name)))
+        .fields.filterNot(f => LakeMeta.hiddenCol(f.name)))
     new GraftLakeTable(inner, visible, s"graft:$name",
       if (writable) Some((warehouse, name)) else None)
   }

@@ -530,4 +530,118 @@ class LakeCatalogSpec extends AnyFunSuite {
     cat.cloneTable("raw.src", "raw.dst")
     assert(cat.table("raw.dst").count() === 3L)
   }
+
+  /** Spark jobs started while `body` runs on this thread. Jobs carry
+    * the submitting thread's local properties; a tagged sentinel job
+    * run afterwards proves every earlier job-start event has reached
+    * the listener (the listener bus delivers in order). */
+  private def jobsStartedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobProbe"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.put)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      try body finally sc.setLocalProperty(key, "sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      Iterator.continually(
+          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { tag =>
+          assert(tag != null, "the sentinel job never reached the listener")
+          tag != "sentinel"
+        }.size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("snapshot log: every logged operation takes the next id; log " +
+      "reads start no Spark job") {
+    import spark.implicits._
+    val wh = TestSpark.tempDir("graft-log")
+    val cat = new LakeCatalog(spark, wh)
+    cat.createNamespace("raw")
+    def batch(ids: Long*) = ids.map(i => (i, s"v$i")).toDF("id", "v")
+    cat.append("raw.t", batch(1L, 2L))
+    assert(cat.appendExactlyOnce("raw.t", batch(3L), batchId = 7L))
+    assert(!cat.appendExactlyOnce("raw.t", batch(3L), batchId = 7L))
+    assert(cat.writeAuditPublish("raw.t", batch(4L), Nil) === Right(3L))
+    cat.append("raw.t", batch(5L))
+    assert(cat.rollbackTo("raw.t", 3L) === 1L)
+    assert(cat.expireSnapshots("raw.t", 2L) === 2L)
+    assert(cat.deleteWhere("raw.t", col("id") === 1L) === 1L)
+    cat.compact("raw.t")
+    cat.cloneTable("raw.t", "raw.c")
+    cat.append("raw.c", batch(6L))
+    cat.overwritePartitions("raw.m",
+      Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), "k")
+    cat.createOrReplace("raw.m", Seq(("a", 1L)).toDF("k", "n"))
+
+    def log(t: String) = cat.snapshots(t).collect().toSeq.map(r =>
+      (r.getAs[Long]("snapshot_id"), r.getAs[String]("operation"),
+        r.getAs[Long]("added_records")))
+    val history = Seq((1L, "append", 2L), (2L, "append", 1L),
+      (3L, "append_wap", 1L), (4L, "append", 1L), (5L, "rollback", -1L),
+      (6L, "expire", 0L), (7L, "rewrite", 1L), (8L, "rewrite", 3L))
+    assert(log("raw.t") === history)
+    assert(log("raw.c") === history :+ ((9L, "append", 1L)))
+    assert(log("raw.m") ===
+      Seq((1L, "overwrite_partitions", 2L), (2L, "replace", 1L)))
+    assert(cat.currentSnapshotId("raw.t") === 8L)
+    assert(cat.currentSnapshotId("raw.c") === 9L)
+    assert(cat.currentSnapshotId("raw.m") === 2L)
+
+    // the compaction raised the floor to its own snapshot
+    intercept[IllegalArgumentException](cat.tableAsOf("raw.t", 7L))
+    assert(TestSpark.collectSet[Long](cat.tableAsOf("raw.t", 8L)
+      .select("id"), "id") === Set(2L, 3L, 4L))
+
+    // catalog VERSION AS OF: a live id resolves to that snapshot; a
+    // digit string that is no snapshot falls back to the tag it names
+    spark.conf.set("spark.sql.catalog.lakelog", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.lakelog.warehouse", wh)
+    cat.tagSnapshot("raw.t", "99", 8L)
+    def ids(version: String) = spark.sql(
+      s"SELECT id FROM lakelog.raw.t VERSION AS OF $version")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids("8") === Seq(2L, 3L, 4L))
+    assert(ids("99") === Seq(2L, 3L, 4L))
+    val e = intercept[Exception](ids("42"))
+    assert(e.getMessage.contains("no snapshot or tag"))
+
+    // log metadata is read driver-side: no Spark job
+    assert(jobsStartedBy(cat.table("raw.t").count()) > 0) // probe works
+    assert(jobsStartedBy {
+      cat.snapshots("raw.t").collect()
+      cat.snapshotIdAt("raw.t", java.time.Instant.now())
+    } === 0)
+  }
+
+  test("TIMESTAMP AS OF the committed_at that snapshots shows resolves " +
+      "to that snapshot on the facade, V2 and catalog surfaces") {
+    import spark.implicits._
+    val wh = TestSpark.tempDir("graft-asof")
+    val cat = new LakeCatalog(spark, wh)
+    cat.createNamespace("raw")
+    (1L to 3L).foreach(i => cat.append("raw.t", Seq(i).toDF("id")))
+    val at = cat.snapshots("raw.t").collect()
+      .find(_.getAs[Long]("snapshot_id") == 2L).get
+      .getAs[java.sql.Timestamp]("committed_at").toInstant.toString
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getAs[Long]("id")).sorted.toSeq
+    cat.exposeSql("raw.t", Some("lcs_asof_t"))
+    assert(ids(spark.sql(
+      s"SELECT id FROM lcs_asof_t TIMESTAMP AS OF '$at'")) === Seq(1L, 2L))
+    assert(ids(spark.read.format("graft").option("as-of-timestamp", at)
+      .load(s"$wh/raw/t")) === Seq(1L, 2L))
+    spark.conf.set("spark.sql.catalog.lakeasof", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.lakeasof.warehouse", wh)
+    assert(ids(spark.sql(
+      s"SELECT id FROM lakeasof.raw.t TIMESTAMP AS OF '$at'")) === Seq(1L, 2L))
+  }
 }

@@ -17,6 +17,10 @@ Checks, in order:
      registry gate) or from a spec under src/test — the registry has
      grown across 11 rounds and nothing else proves a refactor didn't
      silently strand an operator without its gate.
+  5. Snapshot-log codec uniqueness: the JSON-key literal `"snapshot_id":`
+     appears in exactly one file under src/main/scala (the codec in
+     graft/pipeline/LakeMeta.scala), so a second writer or reader of the
+     log format cannot come back unnoticed.
 
 Usage: python3 tools/close_check.py [verify_out_dir]
 Exit 0 = all green; prints a receipt line per check.
@@ -173,5 +177,20 @@ if orphans:
 else:
     print(f"PASS orphan-operators: all {len(public)} public operator defs "
           "reachable from a gate or spec")
+
+# 5. snapshot-log codec uniqueness: exactly one main-source file may
+#    spell the log's `"snapshot_id":` key.
+key = '"snapshot_id":'
+holders = sorted(
+    os.path.relpath(f, REPO)
+    for f in glob.glob(os.path.join(REPO, "src/main/scala/**/*.scala"),
+                       recursive=True)
+    if key in open(f).read())
+if len(holders) != 1:
+    print(f"FAIL snapshot-log-codec: {key} appears in {len(holders)} "
+          f"src/main files, want exactly 1: {holders}")
+    fail = 1
+else:
+    print(f"PASS snapshot-log-codec: {key} appears only in {holders[0]}")
 
 sys.exit(fail)
